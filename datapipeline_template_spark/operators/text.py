@@ -1278,7 +1278,6 @@ def poly_hash_kernel(col: Column | str) -> Column:
 
     @pandas_udf(T.LongType())
     def _ph(s: pd.Series) -> pd.Series:
-        out = np.zeros(len(s), dtype=np.float64)  # via object at the end
         res = pd.Series([None] * len(s), dtype="object")
         mask = s.notna().to_numpy()
         vals = s[mask]
@@ -1307,7 +1306,7 @@ def poly_hash_kernel(col: Column | str) -> Column:
 
 def bigram_hash_rows_kernel(
     df: DataFrame, text_col: str, out_cols: tuple[str, str] = ("bigram", "h")
-) -> Column:
+) -> DataFrame:
     """EXPLODED (bigram, poly_hash(bigram)) rows from raw text as one
     Arrow kernel pass — bit-equal to the Catalyst
     ``_bigram_stream + poly_hash`` chain (parity test-pinned): Spark's

@@ -10,11 +10,18 @@ the primary key** and rewrites only buckets containing changed keys —
 a MERGE INTO equivalent built from parquet + dynamic partition
 overwrite (no Delta required):
 
-1. delta   = bronze rows with ingest watermark ≥ last high-water mark
-2. buckets = distinct pmod(hash(pk), n_buckets) among delta rows
+1. delta   = bronze rows with ingest watermark > last high-water mark
+2. buckets = distinct pmod(hash(pk), n_buckets) among delta rows, in
+             one aggregate that also yields the row count and the new
+             high-water mark (the delta's max watermark)
 3. cand    = delta ∪ (current silver ∩ those buckets)
 4. rebuilt = keep-latest dedup → CDC delete filter → expectations
-5. dynamic-partition-overwrite of just those buckets
+5. dynamic-partition-overwrite of just those buckets; an
+   ``Observation`` on the written frame records which buckets the
+   write held, and buckets that curation emptied are dropped
+
+An update is four Spark jobs: the delta aggregate and the rewrite
+(each a shuffle stage plus a result stage).
 
 Correctness: silver rows are already the per-key latest, so
 keep-latest over (silver ∪ delta) equals keep-latest over the full
@@ -51,7 +58,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EntityConfig, PipelineParams
@@ -155,12 +162,22 @@ class IncrementalSilver:
             if tb in bronze.columns and tb not in order_cols:
                 order_cols.append(tb)
 
+        # A plain session-level set, never restored: every concurrent
+        # update sets the same value, while a set-then-restore could
+        # land mid-write in another entity's insertInto and turn it
+        # into a static overwrite that wipes its untouched buckets (the
+        # writer option is ignored by insertInto on a catalog table).
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         hwm = self._load_hwm()
         table_exists = spark.catalog.tableExists(self.silver_fqn)
 
         if hwm is None or not table_exists:
-            # Bootstrap: full build, bucket-partitioned.
+            # Bootstrap: full build, bucket-partitioned. Row count and
+            # high-water mark in ONE bronze scan, taken before the
+            # write so a row landing meanwhile is reprocessed next run
+            # (harmless) rather than skipped.
+            summary = bronze.agg(F.count(F.lit(1)).alias("n"),
+                                 F.max(F.col(wm_col)).alias("m")).collect()[0]
             full = bronze.withColumn(BUCKET_COL, self._bucket_expr(pk_cols))
             rebuilt = self._curate(full, pk_cols, order_cols)
             (
@@ -169,20 +186,25 @@ class IncrementalSilver:
                 .partitionBy(BUCKET_COL)
                 .saveAsTable(self.silver_fqn)
             )
-            stats = {"new_rows": bronze.count(), "buckets_rewritten": self.n_buckets,
+            stats = {"new_rows": summary["n"], "buckets_rewritten": self.n_buckets,
                      "mode": "bootstrap"}
+            new_hwm = summary["m"]
         else:
             delta = bronze.where(F.col(wm_col) > F.lit(hwm).cast("timestamp"))
             delta = delta.withColumn(BUCKET_COL, self._bucket_expr(pk_cols))
-            # ONE job for both the row count and the affected-bucket
-            # list (a separate count() + distinct().collect() doubled
-            # the delta scan — job-launch overhead dominates small
-            # deltas, the common case this path exists for).
-            bucket_counts = delta.groupBy(BUCKET_COL).count().collect()
-            n_new = int(sum(r["count"] for r in bucket_counts))
+            # ONE delta scan yields the row count, the affected-bucket
+            # list and the new high-water mark: every delta row is above
+            # the old mark, so the delta's max IS bronze's max.
+            bucket_stats = (
+                delta.groupBy(BUCKET_COL)
+                .agg(F.count(F.lit(1)).alias("n"), F.max(F.col(wm_col)).alias("m"))
+                .collect()
+            )
+            n_new = int(sum(r["n"] for r in bucket_stats))
             if n_new == 0:
                 return {"new_rows": 0, "buckets_rewritten": 0, "mode": "noop"}
-            buckets = [r[BUCKET_COL] for r in bucket_counts]
+            buckets = [r[BUCKET_COL] for r in bucket_stats]
+            new_hwm = max(r["m"] for r in bucket_stats)
             silver = spark.read.table(self.silver_fqn)
             cand = silver.where(F.col(BUCKET_COL).isin(buckets)).unionByName(
                 delta, allowMissingColumns=True
@@ -193,36 +215,24 @@ class IncrementalSilver:
             # replaced; saveAsTable(overwrite) would drop the whole
             # table, untouched buckets included. insertInto is
             # positional — align to the table's column order.
-            table_cols = spark.read.table(self.silver_fqn).columns
             # Dynamic overwrite only touches partitions PRESENT in the
-            # written data — a delete that empties a bucket leaves the
-            # stale partition behind. The present-bucket probe costs a
-            # SECOND pass through curation, so it runs only when
-            # curation can actually drop rows (soft-delete filter
-            # active on a CDC source, or expectations configured);
-            # keep-latest alone can never empty a bucket that delta
-            # rows land in.
-            curation_can_drop = bool(self.entity.expect_all_or_drop) or (
-                self.params.soft_deletes.upper() != "Y" and "op" in cand.columns
-            )
-            if curation_can_drop:
-                rebuilt = rebuilt.localCheckpoint(eager=True)
-                present = {
-                    r[0] for r in rebuilt.select(BUCKET_COL).distinct().collect()
-                }
+            # written data, so a delete that empties a bucket would
+            # leave the stale partition behind: the write itself
+            # observes which buckets it wrote (no extra job).
+            present = Observation()
             (
-                rebuilt.select(*table_cols)
+                rebuilt.select(*silver.columns)
+                .observe(present, F.collect_set(BUCKET_COL).alias("buckets"))
                 .write.mode("overwrite")
                 .insertInto(self.silver_fqn)
             )
-            if curation_can_drop:
-                emptied = [b for b in buckets if b not in present]
-                if emptied:
-                    self._drop_buckets(emptied)
+            written = set(present.get["buckets"])
+            emptied = [b for b in buckets if b not in written]
+            if emptied:
+                self._drop_buckets(emptied)
             stats = {"new_rows": n_new, "buckets_rewritten": len(buckets),
                      "mode": "incremental"}
 
-        new_hwm = bronze.agg(F.max(F.col(wm_col)).alias("m")).collect()[0]["m"]
         if new_hwm is not None:
             self._store_hwm(str(new_hwm))
         return stats

@@ -30,7 +30,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import EntityConfig, PipelineParams
 from ..operators.cdc import create_active_view, drop_soft_deleted
@@ -115,13 +114,16 @@ class Pipeline:
     def build_bronze(self, entity: EntityConfig) -> None:
         src = self._entity_source(entity)
         fqn = self.bronze_table(entity.name)
+        # The batch path's overwrite recreates the table every run; a
+        # streaming run creates it only on the first (or a refresh).
+        created = not self.streaming or not self.spark.catalog.tableExists(fqn)
         if self.streaming:
             ckpt = self._checkpoint(entity)
             schema = load_or_infer_schema(self.spark, entity.raw_file_format, src, ckpt)
             raw = read_stream(self.spark, entity.raw_file_format, src, schema)
             df = self.bronze_transform(raw)
-            self._evolve_table_schema(fqn, df.schema)
-            if self.spark.catalog.tableExists(fqn):
+            if not created:
+                self._evolve_table_schema(fqn, df.schema)
                 # Align column order with the (possibly evolved) table
                 # schema — appends must not rely on positional luck.
                 df = df.select(*self.spark.read.table(fqn).columns)
@@ -135,15 +137,18 @@ class Pipeline:
             if ext:
                 writer = writer.option("path", ext)
             writer.saveAsTable(fqn)
-        self._set_table_comment(
-            fqn, f"Bronze raw ingestion for {entity.name} from {src}"
-        )
+        if created:
+            self._set_table_comment(
+                fqn, f"Bronze raw ingestion for {entity.name} from {src}"
+            )
 
     def _set_table_comment(self, fqn: str, comment: str) -> None:
         """Carry the reference's human-readable table comment onto the
         created table (01_bronze_ingestion.py:94,
         02_silver_processing.py:146) — Spark surfaces the ``comment``
-        table property as the Comment row of DESCRIBE TABLE EXTENDED."""
+        table property as the Comment row of DESCRIBE TABLE EXTENDED.
+        Table properties survive appends and partition overwrites, so
+        only the run that creates a table sets it."""
         escaped = comment.replace("'", "''")
         self.spark.sql(
             f"ALTER TABLE {fqn} SET TBLPROPERTIES ('comment'='{escaped}')"
@@ -154,9 +159,8 @@ class Pipeline:
         catalog schema is fixed at creation, so when the inferred
         source schema gains columns we ALTER TABLE ADD COLUMNS before
         the run; old files read NULL for the new fields (the same
-        observable behavior as Auto Loader + Delta mergeSchema)."""
-        if not self.spark.catalog.tableExists(fqn):
-            return
+        observable behavior as Auto Loader + Delta mergeSchema). The
+        table must exist."""
         existing = {f.name for f in self.spark.read.table(fqn).schema.fields}
         new_fields = [f for f in stream_schema.fields if f.name not in existing]
         if new_fields:
@@ -196,17 +200,18 @@ class Pipeline:
         if self.silver_mode == "incremental":
             from .incremental import IncrementalSilver
 
-            IncrementalSilver(
+            stats = IncrementalSilver(
                 self.spark,
                 self.params,
                 entity,
                 n_buckets=self.n_buckets,
                 state_dir=os.path.join(self.checkpoint_root, entity.name, "_incremental"),
             ).run()
-            self._set_table_comment(
-                self.silver_table(entity.name),
-                f"Silver deduplicated table for {entity.name}",
-            )
+            if stats["mode"] == "bootstrap":  # the run that (re)created the table
+                self._set_table_comment(
+                    self.silver_table(entity.name),
+                    f"Silver deduplicated table for {entity.name}",
+                )
             return
         bronze = self.spark.read.table(self.bronze_table(entity.name))
         df = self.silver_transform(bronze, entity)
@@ -351,12 +356,3 @@ class Pipeline:
                 ext = self._external_path(layer, e.name)
                 if ext and os.path.isdir(ext):
                     shutil.rmtree(ext)
-
-
-def derive_op_column(df: DataFrame, op_col: str = "op") -> DataFrame:
-    """Helper for non-CDC sources: stamp a constant upsert op so the
-    CDC path is uniform (the reference assumes the column exists in
-    the feed — README.md example data)."""
-    if op_col in df.columns:
-        return df
-    return df.withColumn(op_col, F.lit("U"))

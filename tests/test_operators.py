@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -293,6 +296,125 @@ def test_dag_topo_and_cycle(spark):
     bad.add(Dataset("y", lambda: None, deps=("x",)))
     with pytest.raises(ValueError, match="cycle"):
         bad.topo_order()
+
+
+def test_dag_runs_independent_nodes_concurrently(spark):
+    # Both builds must be inside wait() at once: a sequential run
+    # breaks the barrier at its timeout instead.
+    barrier = threading.Barrier(2, timeout=20)
+    dag = Dag()
+    dag.add(Dataset("a", barrier.wait))
+    dag.add(Dataset("b", barrier.wait))
+    dag.add(Dataset("c", lambda: "done", deps=("a", "b")))
+    assert list(dag.run()) == ["a", "b", "c"]
+
+
+def test_dag_concurrent_run_respects_dependencies(spark):
+    events, lock = [], threading.Lock()
+
+    def node(name, pause=0.0):
+        def build():
+            with lock:
+                events.append(("start", name))
+            time.sleep(pause)
+            with lock:
+                events.append(("end", name))
+            return name
+        return build
+
+    dag = Dag()
+    dag.add(Dataset("d", node("d"), deps=("b", "c")))
+    dag.add(Dataset("b", node("b", 0.3), deps=("a",)))
+    dag.add(Dataset("c", node("c"), deps=("a",)))
+    dag.add(Dataset("a", node("a", 0.1)))
+    dag.add(Dataset("e", node("e", 0.2)))
+    out = dag.run()
+    assert list(out.items()) == [(n, n) for n in "aebcd"]  # results in topo order
+    at = {ev: i for i, ev in enumerate(events)}
+    for child, parent in (("b", "a"), ("c", "a"), ("d", "b"), ("d", "c")):
+        assert at[("end", parent)] < at[("start", child)]
+
+
+def test_dag_wide_graph_stress(spark):
+    """More ready nodes than cores, with frequent thread switches:
+    every node builds exactly once and after its dependency."""
+    import sys
+
+    built, lock = [], threading.Lock()
+
+    def node(name):
+        def build():
+            with lock:
+                built.append(name)
+        return build
+
+    dag = Dag()
+    for chain in range(16):
+        for step in range(3):
+            deps = (f"{chain}.{step - 1}",) if step else ()
+            dag.add(Dataset(f"{chain}.{step}", node(f"{chain}.{step}"), deps=deps))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        dag.run()
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(built) == sorted(dag.nodes)
+    for chain in range(16):
+        assert [b for b in built if b.startswith(f"{chain}.")] == [
+            f"{chain}.{step}" for step in range(3)]
+
+
+def test_dag_failure_skips_dependents_and_reraises(spark):
+    class Boom(Exception):
+        pass
+
+    boom = Boom("node failed")
+    built, lock = [], threading.Lock()
+
+    def record(name, pause=0.0):
+        def build():
+            time.sleep(pause)
+            with lock:
+                built.append(name)
+        return build
+
+    def fail():
+        raise boom
+
+    dag = Dag()
+    dag.add(Dataset("bad", fail))
+    dag.add(Dataset("child", record("child"), deps=("bad",)))
+    dag.add(Dataset("grandchild", record("grandchild"), deps=("child",)))
+    dag.add(Dataset("other", record("other", 0.2)))
+    dag.add(Dataset("other_child", record("other_child"), deps=("other",)))
+    with pytest.raises(Boom) as err:
+        dag.run()
+    assert err.value is boom
+    assert sorted(built) == ["other", "other_child"]
+
+
+def test_dag_nodes_inherit_callers_job_group(spark):
+    sc = spark.sparkContext
+    group = "dag-inherit-job-group"
+    main = threading.get_ident()
+    threads = []
+
+    def build():
+        threads.append(threading.get_ident())
+        return spark.range(10).count()
+
+    dag = Dag()
+    dag.add(Dataset("n", build))
+    sc.setJobGroup(group, "jobs of a dag node")
+    try:
+        assert dag.run() == {"n": 10}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert threads and threads[0] != main
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
 
 
 def test_connected_components_known_graphs(spark):

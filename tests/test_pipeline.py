@@ -84,6 +84,13 @@ def pipeline_env(spark, tmp_path):
     return params, entity, str(entity_dir), warehouse
 
 
+def _comment(spark, fqn: str) -> str:
+    """DESCRIBE TABLE EXTENDED surfaces the 'comment' property as the
+    Comment row."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fqn}").collect()
+    return next(r["data_type"] for r in rows if r["col_name"] == "Comment")
+
+
 def test_batch_pipeline_semantics(spark, pipeline_env):
     params, entity, entity_dir, _ = pipeline_env
     _write_batch(spark, entity_dir, _fixture_rows_v1())
@@ -115,16 +122,11 @@ def test_batch_pipeline_semantics(spark, pipeline_env):
     assert "client_platform" in silver.columns and "platform" not in silver.columns
 
     # table comment parity (01_bronze_ingestion.py:94,
-    # 02_silver_processing.py:146): DESCRIBE TABLE EXTENDED surfaces
-    # the 'comment' property as the Comment row.
-    def _comment(fqn: str) -> str:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fqn}").collect()
-        return next(r["data_type"] for r in rows if r["col_name"] == "Comment")
-
-    assert _comment("t_bronze.bronze_app_downloads") == (
+    # 02_silver_processing.py:146).
+    assert _comment(spark, "t_bronze.bronze_app_downloads") == (
         f"Bronze raw ingestion for app_downloads from {entity_dir}"
     )
-    assert _comment("t_silver.silver_app_downloads") == (
+    assert _comment(spark, "t_silver.silver_app_downloads") == (
         "Silver deduplicated table for app_downloads"
     )
 
@@ -213,6 +215,14 @@ def test_pipeline_incremental_silver_mode(spark, pipeline_env, tmp_path):
     assert set(rows) == {1, 3, 6}
     assert rows[1]["downloads"] == 50 and rows[1]["client_platform"] == "ios16"
     assert "_pk_bucket" in silver.columns  # bucket partitioning visible
+    # The comments are set by the run that creates each table only;
+    # they must survive the later appends and bucket overwrites.
+    assert _comment(spark, "t_bronze.bronze_app_downloads") == (
+        f"Bronze raw ingestion for app_downloads from {entity_dir}"
+    )
+    assert _comment(spark, "t_silver.silver_app_downloads") == (
+        "Silver deduplicated table for app_downloads"
+    )
 
 
 def test_full_refresh_cleans_external_location(spark, tmp_path):
