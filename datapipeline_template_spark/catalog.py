@@ -7,13 +7,24 @@ lineitem events documents embeddings — one parquet file per table under
 All access is via ``spark.read.parquet`` so Catalyst sees a plain file
 relation: predicate pushdown, column pruning and partition pruning all
 apply (verify with ``df.explain()`` → ``PushedFilters`` / ``ReadSchema``).
+
+Footer schemas are cached per process, keyed by the file's identity
+``(abspath, st_size, st_mtime_ns)``. Without a schema,
+``spark.read.parquet`` runs a Spark job to infer it on every call; the
+first read of a file still does, later reads pass the cached schema and
+run none. A file rewritten at the same path gets a new size or mtime, so
+it is inferred again and its entry replaced (one entry per path). Paths
+that ``os.stat`` cannot see (remote filesystems) and directories are
+read without the cache.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["TABLES", "table", "register_views", "default_sf_dir"]
 
@@ -31,8 +42,32 @@ TABLES: tuple[str, ...] = (
 )
 
 
+# abspath -> ((st_size, st_mtime_ns), footer schema); see the module doc.
+# One entry per path: a rewritten file replaces its stale entry. No lock:
+# concurrent first reads of a file both infer and store equal entries.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema only on
+    its first read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)  # raises for a missing path
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key, ident = os.path.abspath(path), (st.st_size, st.st_mtime_ns)
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == ident:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (ident, df.schema)
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,7 +105,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Keep setting the legacy conf: on Spark 3 it is what makes the
         # nanos file readable at all; on Spark 4 it is a no-op.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -83,7 +118,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def register_views(

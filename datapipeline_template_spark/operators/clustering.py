@@ -33,6 +33,13 @@ Scale shape (the 100-TB story):
   ss07 centroid-sum shape). The driver collects k·dim longs per
   iteration — coordination only, never data (the q26b multipass
   convention).
+- Small corpora run on the driver instead, with the same integer math
+  and the same numpy kernels: ``kmeans_fit`` below
+  ``LOCAL_FIT_MAX_CELLS`` quantized cells (one collect, then Lloyd's
+  iterations), ``semdedup``'s assignment, centroid cosine and marks
+  below ``grouped.LOCAL_KERNEL_MAX_ROWS`` rows. Each Python stage
+  costs 0.1-0.2 s of fixed worker time in local mode, more than the
+  numpy work at that size.
 - The Catalyst assignment twin (``kmeans_assign_catalyst``) is the
   DuckDB-replayable reference form; the kernel is the corpus-scale
   path — bit-equal by parity test (the dd03/dd05 and
@@ -52,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import lit_long_array, lit_long_matrix, quantize_vec
+from .grouped import apply_grouped
 
 __all__ = [
     "centroids_to_df",
@@ -77,6 +85,10 @@ __all__ = [
 # closure; keep the product bounded so a misuse (huge k on a huge dim)
 # fails loudly instead of serializing gigabytes per task.
 MAX_CENTROID_CELLS = 50_000_000
+
+# Corpora up to this many quantized cells (rows × dim int64, 8 MB) are
+# fitted on the driver from one collect (see ``kmeans_fit``).
+LOCAL_FIT_MAX_CELLS = 1_000_000
 
 
 def k_for_corpus(
@@ -211,6 +223,20 @@ def kmeans_assign_catalyst(
     )
 
 
+def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Nearest centroid of each row of ``X`` (rows × dim int64) among
+    ``C`` (k × dim int64): (cluster, squared distance), both int64.
+    rows × k exact int64: ‖x‖² − 2x·c + ‖c‖² stays integer; argmin
+    returns the FIRST minimum (smallest cluster id)."""
+    d = (
+        (X * X).sum(axis=1, keepdims=True)
+        - 2 * (X @ C.T)
+        + (C * C).sum(axis=1)[None, :]
+    )
+    cl = d.argmin(axis=1)
+    return cl.astype(np.int64), d[np.arange(len(X)), cl]
+
+
 def _assign_kernel_udf(get_C):
     """The shared Arrow assignment kernel, parameterized over how each
     executor obtains the centroid matrix: a captured array (the
@@ -234,18 +260,9 @@ def _assign_kernel_udf(get_C):
                     "dist": pd.Series([], dtype="int64"),
                 }
             )
-        C = get_C()
         X = np.stack(v.to_numpy()).astype(np.int64)  # rows × dim
-        # rows × k exact int64: ‖x‖² − 2x·c + ‖c‖² stays integer.
-        d = (
-            (X * X).sum(axis=1, keepdims=True)
-            - 2 * (X @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )
-        cl = d.argmin(axis=1)
-        return pd.DataFrame(
-            {"cluster": cl.astype(np.int64), "dist": d[np.arange(len(X)), cl]}
-        )
+        cl, dist = _nearest(X, get_C())
+        return pd.DataFrame({"cluster": cl, "dist": dist})
 
     return _assign
 
@@ -298,6 +315,23 @@ def kmeans_assign_broadcast(df: DataFrame, qv_col: str, centroids_bc) -> DataFra
     )
 
 
+def _lloyd_local(
+    X: np.ndarray, centroids: list[list[int]], n_iter: int
+) -> list[list[int]]:
+    """``kmeans_fit``'s iterations over a driver-side corpus ``X``
+    (rows × dim int64): the kernel's assignment, per-cluster integer
+    sums, trunc-div update, empty clusters keep their centroid."""
+    C = np.asarray(centroids, dtype=np.int64)
+    for _ in range(n_iter):
+        cl, _dist = _nearest(X, C)
+        counts = np.bincount(cl, minlength=len(C))
+        sums = np.zeros_like(C)
+        np.add.at(sums, cl, X)
+        q = np.abs(sums) // np.maximum(counts, 1)[:, None]
+        C = np.where(counts[:, None] > 0, np.where(sums >= 0, q, -q), C)
+    return C.tolist()
+
+
 def kmeans_fit(
     df: DataFrame,
     id_col: str,
@@ -314,6 +348,12 @@ def kmeans_fit(
     groupBy(cluster, dim) partial-agg → collect k·dim (sum, count)
     rows → exact trunc-div centroid update in Python. Driver traffic
     is k·dim longs per iteration regardless of corpus size.
+
+    A corpus of at most ``LOCAL_FIT_MAX_CELLS`` quantized cells is
+    collected once instead and iterated on the driver (``_lloyd_local``,
+    the same integer math, so the centroids are bit-equal): one job in
+    place of one per iteration, each of which pays a Python-worker
+    round trip that dwarfs the arithmetic at that size.
 
     ``init_offset`` shifts the deterministic init window to the
     id-ranked rows [offset, offset+k) — offset 0 is the documented
@@ -332,6 +372,15 @@ def kmeans_fit(
     centroids = [[int(v) for v in r["_qv"]] for r in init_rows]
     if dim is None:
         dim = len(centroids[0])
+
+    if n_iter > 0 and dim == len(centroids[0]):
+        cap = LOCAL_FIT_MAX_CELLS // max(dim, 1)
+        rows = q.select("_qv").limit(cap + 1).collect()
+        if len(rows) <= cap and all(
+            r["_qv"] is not None and len(r["_qv"]) == dim for r in rows
+        ):
+            X = np.array([r["_qv"] for r in rows], dtype=np.int64).reshape(-1, dim)
+            return _lloyd_local(X, centroids, n_iter)
 
     for _ in range(n_iter):
         assigned = kmeans_assign(q, "_qv", centroids)
@@ -454,6 +503,10 @@ def semdedup(
         q = df.select(
             F.col(id_col).alias("vec_id"), quantize_vec(vec_col).alias("_qv")
         )
+        if kernel:
+            local = _semdedup_local(q, centroids, threshold, max_cluster_size)
+            if local is not None:
+                return local
         assigned = kmeans_assign(q, "_qv", centroids)
     if max_cluster_size is not None:
         if not caller_assigned:
@@ -470,13 +523,7 @@ def semdedup(
             .collect()
         )
         if hot:
-            raise ValueError(
-                f"cluster {hot[0]['cluster']} has {hot[0]['n']} members "
-                f"> max_cluster_size={max_cluster_size}; the within-cluster "
-                "pair join would go quadratic on it — re-fit with a larger "
-                "k (SemDeDup scales k with the corpus) or raise the cap "
-                "explicitly."
-            )
+            raise _hot_cluster_error(hot[0]["cluster"], hot[0]["n"], max_cluster_size)
 
     with_cs = with_centroid_cosine(assigned, "_qv", centroids).where(
         F.col("_n") > 0
@@ -515,6 +562,102 @@ def semdedup(
     return marked.distinct()
 
 
+def _hot_cluster_error(cluster, n, max_cluster_size: int) -> ValueError:
+    return ValueError(
+        f"cluster {cluster} has {n} members "
+        f"> max_cluster_size={max_cluster_size}; the within-cluster "
+        "pair join would go quadratic on it — re-fit with a larger "
+        "k (SemDeDup scales k with the corpus) or raise the cap "
+        "explicitly."
+    )
+
+
+def _semdedup_local(
+    q: DataFrame,
+    centroids: list[list[int]],
+    threshold: float,
+    max_cluster_size: int | None,
+) -> DataFrame | None:
+    """``semdedup``'s kernel path on the driver for a corpus ``q``
+    (vec_id, _qv) of at most ``grouped.LOCAL_KERNEL_MAX_ROWS`` rows:
+    the assignment kernel's ``_nearest``, the centroid cosine as the
+    same IEEE expression ``with_centroid_cosine`` evaluates
+    (double(dot) / (sqrt(double(n)) · sqrt(double(n_c)))) and the same
+    per-cluster ``_semdedup_marks``, so the marks are the same set.
+    Returns None, for the Spark path to run, when the corpus is larger,
+    has a null id or vector, or puts a nonzero vector in a cluster
+    whose centroid is the zero vector (the Spark path's cosine divides
+    by zero there, which ANSI mode raises)."""
+    from . import grouped
+
+    cap = grouped.LOCAL_KERNEL_MAX_ROWS
+    dim = len(centroids[0])
+    rows = q.limit(cap + 1).collect()
+    if len(rows) > cap or any(
+        r[0] is None or r[1] is None or len(r[1]) != dim for r in rows
+    ):
+        return None
+    X = np.array([r[1] for r in rows], dtype=np.int64).reshape(-1, dim)
+    C = np.asarray(centroids, dtype=np.int64)
+    cl, _dist = _nearest(X, C)
+    if max_cluster_size is not None:
+        sizes = np.bincount(cl, minlength=len(C))
+        hot = np.flatnonzero(sizes > max_cluster_size)
+        if len(hot):
+            raise _hot_cluster_error(int(hot[0]), int(sizes[hot[0]]), max_cluster_size)
+    n = (X * X).sum(axis=1)
+    cn = (C * C).sum(axis=1)[cl]
+    keep = n > 0
+    if (cn[keep] == 0).any():
+        return None
+    cs = (X * C[cl]).sum(axis=1).astype(np.float64) / (
+        np.sqrt(n.astype(np.float64)) * np.sqrt(cn.astype(np.float64))
+    )
+    pdf = pd.DataFrame(
+        {"vec_id": [r[0] for r in rows], "cluster": cl, "_qv": list(X),
+         "_n": n, "_cs": cs}
+    )[keep]
+    marks = [_semdedup_marks(g, threshold) for _, g in pdf.groupby("cluster")]
+    out = pd.concat(marks, ignore_index=True) if marks else pdf[["cluster", "vec_id"]]
+    schema = T.StructType(
+        [T.StructField("cluster", T.LongType()),
+         T.StructField("vec_id", q.schema["vec_id"].dataType)]
+    )
+    return q.sparkSession.createDataFrame(out[["cluster", "vec_id"]], schema)
+
+
+def _semdedup_marks(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """The marked (cluster, vec_id) rows of one cluster's members
+    (vec_id, cluster, _qv, _n, _cs); see ``_semdedup_marks_kernel``."""
+    n = len(pdf)
+    empty = pdf.iloc[0:0][["cluster", "vec_id"]]
+    if n < 2:
+        return empty
+    order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
+    ids = pdf["vec_id"].to_numpy()[order]
+    M = np.stack(pdf["_qv"].to_numpy()[order]).astype(np.int64)
+    nrm = pdf["_n"].to_numpy()[order].astype(np.int64)
+    cs = pdf["_cs"].to_numpy()[order].astype(np.float64)
+    G = M @ M.T
+    s = np.sqrt(nrm.astype(np.float64))
+    cos = G.astype(np.float64) / (s[:, None] * s[None, :])
+    ia, ja = np.triu_indices(n, 1)  # ids sorted: id_a=ids[ia] < ids[ja]
+    hit = cos[ia, ja] >= threshold
+    ia, ja = ia[hit], ja[hit]
+    csa, csb = cs[ia], cs[ja]
+    # higher centroid cosine loses; exact tie -> larger id (= ja's)
+    marked = np.where(csa > csb, ids[ia], ids[ja])
+    out = empty
+    if len(marked):
+        out = pd.DataFrame(
+            {
+                "cluster": np.repeat(pdf["cluster"].to_numpy()[:1], len(marked)),
+                "vec_id": marked,
+            }
+        ).drop_duplicates()
+    return out
+
+
 def _semdedup_marks_kernel(with_cs: DataFrame, threshold: float) -> DataFrame:
     """The SemDeDup within-cluster pair stage as ONE per-cluster numpy
     kernel (the mutual_knn_edges_kernel shape, r14): pairwise dots as
@@ -526,42 +669,14 @@ def _semdedup_marks_kernel(with_cs: DataFrame, threshold: float) -> DataFrame:
     replaces the pair join + the (cluster, id) distinct; the bounded-
     cluster contract is the caller's, same as the join form
     (max_cluster_size enforces it)."""
-    cl_type = with_cs.schema["cluster"].dataType.simpleString()
-    id_type = with_cs.schema["vec_id"].dataType.simpleString()
-    out_schema = f"cluster {cl_type}, vec_id {id_type}"
+    out_schema = T.StructType(
+        [T.StructField(c, with_cs.schema[c].dataType) for c in ("cluster", "vec_id")]
+    )
 
     def _marks(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pdf.iloc[0:0][["cluster", "vec_id"]]
-        if n < 2:
-            return empty
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        M = np.stack(pdf["_qv"].to_numpy()[order]).astype(np.int64)
-        nrm = pdf["_n"].to_numpy()[order].astype(np.int64)
-        cs = pdf["_cs"].to_numpy()[order].astype(np.float64)
-        G = M @ M.T
-        s = np.sqrt(nrm.astype(np.float64))
-        cos = G.astype(np.float64) / (s[:, None] * s[None, :])
-        ia, ja = np.triu_indices(n, 1)  # ids sorted: id_a=ids[ia] < ids[ja]
-        hit = cos[ia, ja] >= threshold
-        ia, ja = ia[hit], ja[hit]
-        csa, csb = cs[ia], cs[ja]
-        # higher centroid cosine loses; exact tie -> larger id (= ja's)
-        marked = np.where(csa > csb, ids[ia], ids[ja])
-        out = pdf.iloc[0:0][["cluster", "vec_id"]]
-        if len(marked):
-            out = pd.DataFrame(
-                {
-                    "cluster": np.repeat(
-                        pdf["cluster"].to_numpy()[:1], len(marked)
-                    ),
-                    "vec_id": marked,
-                }
-            ).drop_duplicates()
-        return out
+        return _semdedup_marks(pdf, threshold)
 
-    return with_cs.groupBy("cluster").applyInPandas(_marks, out_schema)
+    return apply_grouped(with_cs, ["cluster"], _marks, out_schema)
 
 
 def d4_prune(

@@ -232,14 +232,15 @@ def minhash_signature(shingle_hashes: Column, num_hashes: int = 32, p: int = POL
     form re-evaluates the shingle expression num_hashes times after
     Catalyst collapses projections — measured 32× slower.
     """
-    params = F.array(
-        *[
-            F.struct(
-                F.lit(2 * i + 1_234_567).cast("long").alias("a"),  # odd multipliers
-                F.lit(9_876_543 + 31 * i).cast("long").alias("b"),
-            )
+    # One parsed literal, not 7 py4j calls per hash (the
+    # ``lit_long_array`` convention); a_i are the odd multipliers.
+    params = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('a', {2 * i + 1_234_567}L, 'b', {9_876_543 + 31 * i}L)"
             for i in range(num_hashes)
-        ]
+        )
+        + ")"
     )
     init = F.array_repeat(F.lit(p).cast("long"), num_hashes)
 

@@ -35,6 +35,7 @@ from ..functions import (
     norm_sq_prequantized,
     quantize_vec,
 )
+from .grouped import apply_grouped
 
 __all__ = [
     "cosine_topk",
@@ -806,7 +807,9 @@ def mutual_knn_edges_kernel(
     pairwise dots as one (n×dim)@(dim×n) exact-int64 matmul, the
     (cos DESC, id ASC) top-k rank, and the mutuality filter — runs in
     numpy inside one ``applyInPandas`` over the block key: ONE shuffle
-    total, no per-pair Python or HOF cost. Bit-equality holds because
+    total, no per-pair Python or HOF cost (an input under
+    ``grouped.LOCAL_KERNEL_MAX_ROWS`` rows runs the same function on
+    the driver instead). Bit-equality holds because
     every step matches the reference op-for-op: quantization and the
     zero-norm filter stay in the same JVM projections, the dot is exact
     int64 either way, and the one float expression is the same IEEE
@@ -881,12 +884,9 @@ def mutual_knn_edges_kernel(
             {"id_a": ids[ia], "id_b": ids[ja], "cosine": cos[ia, ja]}
         )
 
-    grouped = (
-        base.groupBy("_blk")
-        if block_col
-        else base.groupBy(F.lit(0).alias("_g"))
-    )
-    return grouped.applyInPandas(_block_edges, out_schema)
+    if not block_col:
+        base = base.withColumn("_blk", F.lit(0))
+    return apply_grouped(base, ["_blk"], _block_edges, out_schema)
 
 
 # ---------------------------------------------------------------------------

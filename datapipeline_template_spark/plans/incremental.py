@@ -104,8 +104,12 @@ class IncrementalSilver:
 
     def _store_hwm(self, value: str) -> None:
         os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._hwm_path(), "w") as f:
+        # Write-then-rename: a torn write must not read as "no mark",
+        # which would silently trigger a full bootstrap rebuild.
+        path = self._hwm_path()
+        with open(path + ".tmp", "w") as f:
             json.dump({"high_water_mark": value}, f)
+        os.replace(path + ".tmp", path)
 
     # -- key plumbing ------------------------------------------------------
     def _renamed(self, names: list[str]) -> list[str]:

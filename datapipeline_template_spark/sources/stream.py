@@ -53,8 +53,11 @@ def load_or_infer_schema(
         evolved = evolve_schema(stored, current)
     else:
         evolved = current
-    with open(store, "w") as f:
+    # Write-then-rename: a crash mid-write leaves the old store intact
+    # instead of a truncated file every later run fails to parse.
+    with open(store + ".tmp", "w") as f:
         json.dump(evolved.jsonValue(), f)
+    os.replace(store + ".tmp", store)
     return evolved
 
 

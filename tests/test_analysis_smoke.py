@@ -120,3 +120,8 @@ def test_query_analyzes(spark, sf_dir, name):
     # without triggering a job — fast enough to cover the full registry.
     schema = REGISTRY[name].fn(spark, sf_dir).schema
     assert len(schema.fields) > 0, f"{name}: empty schema"
+
+
+def test_skip_list_names_registered_queries():
+    # A renamed query would otherwise leave a dead skip entry behind.
+    assert EXECUTES_AT_BUILD <= set(REGISTRY), sorted(EXECUTES_AT_BUILD - set(REGISTRY))

@@ -17,8 +17,11 @@ from datapipeline_template_spark.queries import load_all
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set[int]:
+    """Ids of the persisted RDDs. Compared as sets, not counts: Spark's
+    ContextCleaner may release an earlier test's RDD at any moment, and
+    a count would read that as a change."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_dd12_does_not_leak_persisted_rdds(spark):
@@ -27,9 +30,9 @@ def test_dd12_does_not_leak_persisted_rdds(spark):
     cached)."""
     fn = load_all()["dd12_dup_span_stats"].fn
     fn(spark, SF_DIR).count()  # warm any session-level machinery
-    base = _n_persisted(spark)
+    base = _persisted(spark)
     fn(spark, SF_DIR).count()
-    assert _n_persisted(spark) == base
+    assert _persisted(spark) - base == set()
 
 
 def test_dd13_storage_growth_bounded(spark):
@@ -41,8 +44,7 @@ def test_dd13_storage_growth_bounded(spark):
     the leak class the dd12 fix removed)."""
     fn = load_all()["dd13_jaccard_estimate"].fn
     fn(spark, SF_DIR).count()
-    after_first = _n_persisted(spark)
+    after_first = _persisted(spark)
     fn(spark, SF_DIR).count()
-    after_second = _n_persisted(spark)
-    growth = after_second - after_first
-    assert growth == 0, f"dd13 grew storage by {growth} RDDs on re-invocation"
+    growth = _persisted(spark) - after_first
+    assert not growth, f"dd13 grew storage by {len(growth)} RDDs on re-invocation"

@@ -73,6 +73,55 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     assert cent[1] == [10000, 0]
 
 
+def _fit_jobs(spark, *args, **kwargs):
+    """(kmeans_fit(...), number of Spark jobs it started)."""
+    sc = spark.sparkContext._jsc.sc()
+    j0 = int(sc.dagScheduler().nextJobId())
+    cent = kmeans_fit(*args, **kwargs)
+    return cent, int(sc.dagScheduler().nextJobId()) - j0
+
+
+def test_kmeans_fit_local_matches_distributed(spark, monkeypatch):
+    """A corpus under LOCAL_FIT_MAX_CELLS is fitted on the driver from
+    one collect; its centroids must equal the per-iteration Spark
+    jobs' bit for bit. The fixtures cover negative coordinates (the
+    trunc-toward-zero update), an emptied cluster and the sf0.001
+    embeddings."""
+    import datapipeline_template_spark.operators.clustering as clustering
+
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.99, 0.0]),
+            (3, [-1.0, 0.0]), (4, [-1.0, 0.0]), (5, [-0.99, 0.0])]
+    tiny = spark.createDataFrame(rows, "id long, vec array<double>")
+    cases = [
+        ((tiny, "id", "vec"), dict(k=3, n_iter=3)),
+        ((_emb(spark), "vec_id", "embedding"), dict(k=5, n_iter=4)),
+        ((_emb(spark), "vec_id", "embedding"), dict(k=4, n_iter=2, init_offset=3)),
+    ]
+    local = [_fit_jobs(spark, *a, **kw) for a, kw in cases]
+    monkeypatch.setattr(clustering, "LOCAL_FIT_MAX_CELLS", 0)
+    dist = [_fit_jobs(spark, *a, **kw) for a, kw in cases]
+    for (lc, lj), (dc, dj), (_, kw) in zip(local, dist, cases):
+        assert lc == dc
+        assert all(isinstance(v, int) for c in lc for v in c)
+        # init + the corpus collect (a multi-partition LIMIT may take
+        # two scans), against init + one job per iteration
+        assert lj <= 3 and kw["n_iter"] + 1 <= dj
+
+
+def test_semdedup_zero_centroid_raises_on_both_paths(spark):
+    """A nonzero vector assigned to an all-zero centroid: the Spark
+    path's centroid cosine divides by zero, which ANSI mode raises. The
+    driver path must hand such a corpus to the Spark path rather than
+    return marks the Spark path would never produce."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [0.0, 0.9])], "id long, vec array<double>"
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        semdedup(
+            df, "id", "vec", centroids=[[0, 0], [10000, 0]], threshold=0.3
+        ).collect()
+
+
 def test_kmeans_k_exceeds_corpus_raises(spark):
     df = spark.createDataFrame([(0, [1.0]), (1, [2.0])], "id long, vec array<double>")
     with pytest.raises(ValueError, match="exceeds corpus size"):
@@ -424,16 +473,20 @@ def test_kmeans_assign_broadcast_matches_closure_kernel(spark):
     assert (b["cluster"], b["dist"]) == (0, 4)
 
 
-def test_semdedup_kernel_marks_bit_equal_reference(spark, sf_dir):
+def test_semdedup_kernel_marks_bit_equal_reference(spark, sf_dir, monkeypatch):
     """The per-cluster Arrow mark kernel must produce EXACTLY the
     Catalyst pair join's marks — same (cluster, vec_id) set — on the
     real embeddings at two thresholds (0.3 = the pipeline's, 0.9 =
-    sparse-marks regime)."""
+    sparse-marks regime), both on the driver (this corpus is under
+    ``LOCAL_KERNEL_MAX_ROWS``) and as ``applyInPandas`` (cap 0)."""
+    import datapipeline_template_spark.operators.grouped as grouped
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.operators.clustering import semdedup
 
     emb = table(spark, sf_dir, "embeddings")
-    for thr in (0.3, 0.9):
+    for thr, cap in ((0.3, None), (0.9, None), (0.3, 0), (0.9, 0)):
+        if cap is not None:
+            monkeypatch.setattr(grouped, "LOCAL_KERNEL_MAX_ROWS", cap)
         ref = sorted(
             (r.cluster, r.vec_id)
             for r in semdedup(

@@ -211,3 +211,22 @@ def test_pipeline_incremental_two_entities_matches_full(spark, tmp_path):
         assert got == contents("full2", n)
         ids = {r[0] for r in got}
         assert 1 in ids and 99 in ids and 2 not in ids and 3 not in ids
+
+
+def test_high_water_mark_survives_torn_write(spark, tmp_path, monkeypatch):
+    """A crash while storing a new mark keeps the previous one; a torn
+    file would read as "no mark" and force a full bootstrap."""
+    import json
+
+    def torn_dump(obj, f, *args, **kwargs):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    params = PipelineParams(source_location=str(tmp_path), catalog="inc")
+    inc = IncrementalSilver(spark, params, EntityConfig(name="items", unique_primary_key=["id"]))
+    inc._store_hwm("2024-01-01 00:00:00")
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        inc._store_hwm("2024-02-01 00:00:00")
+    monkeypatch.undo()
+    assert inc._load_hwm() == "2024-01-01 00:00:00"

@@ -3003,7 +3003,7 @@ def test_lit_long_array_matrix_equal_per_element_form(spark):
 
 
 @pytest.mark.slow
-def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir):
+def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir, monkeypatch):
     """The per-block Arrow mutual-kNN kernel (r13 verdict item 2) must
     be BIT-equal to the Catalyst reference form — same edges, same
     IEEE-double cosines (compared via float hex, not approx) — on both
@@ -3018,6 +3018,8 @@ def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir):
         mutual_knn_edges_kernel,
     )
 
+    import datapipeline_template_spark.operators.grouped as grouped
+
     emb = table(spark, sf_dir, "embeddings")
 
     def rows(df):
@@ -3025,12 +3027,18 @@ def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir):
             (r.id_a, r.id_b, float(r.cosine).hex()) for r in df.collect()
         )
 
-    # blocked (label) at a k exceeding some block sizes at sf0.001
+    # blocked (label) at a k exceeding some block sizes at sf0.001, the
+    # kernel on the driver and (cap 0) as applyInPandas
     a = rows(mutual_knn_edges(emb, "vec_id", "embedding", k=5, block_col="label"))
     b = rows(
         mutual_knn_edges_kernel(emb, "vec_id", "embedding", k=5, block_col="label")
     )
-    assert a == b and len(a) > 0
+    with monkeypatch.context() as m:
+        m.setattr(grouped, "LOCAL_KERNEL_MAX_ROWS", 0)
+        c = rows(
+            mutual_knn_edges_kernel(emb, "vec_id", "embedding", k=5, block_col="label")
+        )
+    assert a == b == c and len(a) > 0
 
     # unblocked slice, with an injected zero vector (must vanish in both)
     sl = emb.where(F.col("vec_id") < 40).select("vec_id", "embedding")

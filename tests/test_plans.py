@@ -388,13 +388,21 @@ def test_dd15_pair_join_is_equi_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ss14_mutual_knn_kernel_single_shuffle(spark):
+def test_ss14_mutual_knn_kernel_single_shuffle(spark, monkeypatch):
     """The kNN graph runs as the per-block Arrow kernel (r13 verdict
     item 2): ONE block-keyed shuffle into FlatMapGroupsInPandas — no
     candidate join, no per-pair interpreted HOF cosine, no ranking
     window in the plan (matmul + rank + mutuality all happen inside
     the numpy batch; bit-equality vs the Catalyst reference form is
-    pinned in test_operators.py)."""
+    pinned in test_operators.py). That is the plan above
+    ``LOCAL_KERNEL_MAX_ROWS`` (set to 0 here); the sf0.001 corpus is
+    under it and runs the same kernel on the driver, so its plan has
+    no Python stage at all."""
+    import datapipeline_template_spark.operators.grouped as grouped
+
+    small = _plan(spark, "ss14_mutual_knn_graph")
+    assert "Python" not in small and "Join" not in small
+    monkeypatch.setattr(grouped, "LOCAL_KERNEL_MAX_ROWS", 0)
     plan = _plan(spark, "ss14_mutual_knn_graph")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

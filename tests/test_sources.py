@@ -108,3 +108,27 @@ def test_json_read_batch(spark, tmp_path):
     df = read_batch(spark, "json", str(path))
     assert df.count() == 3
     assert "amount" in df.columns
+
+
+def _torn_dump(obj, f, *args, **kwargs):
+    """json.dump that dies partway through its write."""
+    f.write(json.dumps(obj)[:7])
+    raise OSError("disk full")
+
+
+def test_schema_store_survives_torn_write(spark, tmp_path, monkeypatch):
+    from datapipeline_template_spark.sources.stream import (
+        _schema_store_path,
+        load_or_infer_schema,
+    )
+
+    src, ckpt = str(tmp_path / "raw"), str(tmp_path / "ckpt")
+    _write_raw(spark, "parquet", src)
+    schema = load_or_infer_schema(spark, "parquet", src, ckpt)
+    monkeypatch.setattr(json, "dump", _torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        load_or_infer_schema(spark, "parquet", src, ckpt)
+    monkeypatch.undo()
+    with open(_schema_store_path(ckpt)) as f:
+        assert T.StructType.fromJson(json.load(f)) == schema
+    assert load_or_infer_schema(spark, "parquet", src, ckpt) == schema
