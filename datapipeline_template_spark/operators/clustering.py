@@ -912,7 +912,9 @@ def pq_codebooks(
     # Spark job submission is thread-safe, and determinism is
     # unaffected because no fit reads another's output (A/B at sf0.1,
     # best-of-2: ss20 12.0 → 8.5 s, ss21 20.6 → 17.6 s).
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from ..session import run_concurrently
 
     def _fit(j: int) -> list[list[int]]:
         sub = df.select(
@@ -921,8 +923,7 @@ def pq_codebooks(
         )
         return kmeans_fit(sub, "vec_id", "_sv", k=k_sub, n_iter=n_iter)
 
-    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-        return list(pool.map(_fit, range(m)))
+    return run_concurrently(*(partial(_fit, j) for j in range(m)))
 
 
 def pq_encode(

@@ -17,6 +17,8 @@ from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from ..session import _inheriting_spark_context
+
 __all__ = ["Dataset", "Dag"]
 
 
@@ -26,22 +28,6 @@ class Dataset:
     build: Callable[[], object]
     deps: tuple[str, ...] = ()
     kind: str = "batch"  # batch | stream | view
-
-
-def _inheriting_spark_context(fn: Callable[[], object]) -> Callable[[], object]:
-    """``fn`` wrapped to run with the calling thread's Spark local
-    properties (job group, job description, scheduler pool) and session
-    tags; ``fn`` itself when no SparkContext is active."""
-    from pyspark import SparkContext
-    from pyspark.sql import SparkSession
-    from pyspark.util import inheritable_thread_target
-
-    if SparkContext._active_spark_context is None:
-        return fn
-    session = SparkSession.getActiveSession()
-    if session is None:
-        return inheritable_thread_target(fn)
-    return inheritable_thread_target(session)(fn)
 
 
 @dataclass

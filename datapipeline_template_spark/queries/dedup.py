@@ -1204,7 +1204,7 @@ def dd18_lsh_operating_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed shingles — concurrent driver threads (guide
     # §2.6, the ss16/ss23 pattern) overlap the truth's bounded
     # all-pairs join with the signature fold.
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_concurrently
 
     def _sigs() -> DataFrame:
         return minhash_signatures(
@@ -1220,11 +1220,7 @@ def dd18_lsh_operating_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sigs_f = pool.submit(_sigs)
-        truth_f = pool.submit(_truth)
-        sigs = sigs_f.result()
-        truth = truth_f.result()
+    sigs, truth = run_concurrently(_sigs, _truth)
     tcnt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
     out = None
     for nb, r in _DD18_CONFIGS:

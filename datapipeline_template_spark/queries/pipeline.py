@@ -517,7 +517,7 @@ def _curation_flags_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedent) so each chain's jobs back-fill the other's executor
     # tail. Both outputs are deterministic mark sets; composition
     # order below is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_concurrently
 
     flags = _curation_flags(spark, sf_dir)
     docs = table(spark, sf_dir, "documents").repartition(
@@ -557,11 +557,7 @@ def _curation_flags_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("_semd", F.lit(True))
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        mh_f = pool.submit(_mh_drop)
-        sem_f = pool.submit(_sem)
-        mh_drop = mh_f.result()
-        sem = sem_f.result()
+    mh_drop, sem = run_concurrently(_mh_drop, _sem)
     return (
         flags.join(mh_drop, on="doc_id", how="left")
         .join(sem, on="doc_id", how="left")

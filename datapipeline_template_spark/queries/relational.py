@@ -2338,10 +2338,10 @@ def q53_join_strategy_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
     are independent chains (each pays two eager checkpoint scans) —
     run on concurrent driver threads, the q55/pq_codebooks §2.6
     pattern; the final union re-orders by pair name."""
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import reduce
+    from functools import partial, reduce
 
     from ..operators.sketch import cm_inner_product, cm_sketch
+    from ..session import run_concurrently
 
     def _pair_row(spec):
         name, (lt, lk), (rt, rk) = spec
@@ -2390,8 +2390,7 @@ def q53_join_strategy_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return row
 
-    with ThreadPoolExecutor(max_workers=len(_Q53_PAIRS)) as pool:
-        rows = list(pool.map(_pair_row, _Q53_PAIRS))
+    rows = run_concurrently(*(partial(_pair_row, s) for s in _Q53_PAIRS))
     return reduce(lambda a, b: a.unionByName(b), rows).orderBy("pair")
 
 
@@ -2693,14 +2692,14 @@ def q55_width_sized_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
     back-fill the executor tail of the others; determinism is
     unaffected because no pair reads another's output and the final
     union is re-ordered by pair name."""
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import reduce
+    from functools import partial, reduce
 
     from ..operators.sketch import (
         cm_sketch,
         kmv_estimate,
         kmv_sketch_partial,
     )
+    from ..session import run_concurrently
 
     widths_df = spark.createDataFrame(
         [(int(w),) for w in _Q55_WIDTHS], "width long"
@@ -2818,6 +2817,5 @@ def q55_width_sized_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return row
 
-    with ThreadPoolExecutor(max_workers=len(_Q53_PAIRS)) as pool:
-        rows = list(pool.map(_pair_row, _Q53_PAIRS))
+    rows = run_concurrently(*(partial(_pair_row, s) for s in _Q53_PAIRS))
     return reduce(lambda a, b: a.unionByName(b), rows).orderBy("pair")

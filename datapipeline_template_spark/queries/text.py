@@ -2596,7 +2596,7 @@ def tx30_tokenizer_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (BPE merge rounds, unigram EM rounds) over the same checkpointed
     # vocab — run them on concurrent driver threads (guide §2.6 / the
     # pq_codebooks precedent); each learns from `words` only.
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_concurrently
 
     def _bpe() -> DataFrame:
         _, fv = bpe_train(bvocab, "rep", "freq", n_merges=_TX20_N_MERGES)
@@ -2607,11 +2607,7 @@ def tx30_tokenizer_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        bpe_f = pool.submit(_bpe)
-        uni_f = pool.submit(_uni)
-        final_v = bpe_f.result()
-        model = uni_f.result()
+    final_v, model = run_concurrently(_bpe, _uni)
     bmap = bpe_vocab_map(final_v).select("word", "n_sub")
     bn_vocab = (
         final_v.select(F.explode(F.split(F.trim("rep"), " ")).alias("s"))

@@ -24,15 +24,22 @@ deployment can override them via ``spark-defaults.conf``:
   the driver, then JIT). 1000 is about 3x that working set. It is a
   static conf, read when the cache is first used, so it only takes
   effect when set before the session is built.
+
+``run_concurrently`` is the one way this package overlaps Spark jobs on
+driver threads: each thunk runs with the caller's job group,
+description, scheduler pool and session tags, so ``cancelJobGroup``
+and ``getJobIdsForGroup`` see the pool threads' jobs too.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONFS"]
+__all__ = ["get_spark", "DEFAULT_CONFS", "run_concurrently"]
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -53,6 +60,32 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.hive.metastorePartitionPruningFallbackOnException": "true",
     "spark.sql.hive.metastorePartitionPruningFastFallback": "true",
 }
+
+
+def _inheriting_spark_context(fn: Callable[[], object]) -> Callable[[], object]:
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties (job group, job description, scheduler pool) and session
+    tags; ``fn`` itself when no SparkContext is active."""
+    from pyspark import SparkContext
+    from pyspark.util import inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    # A pool thread has no active session of its own: fall back to the
+    # process's instantiated session so nested pools inherit its tags.
+    session = SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    if session is None:
+        return inheritable_thread_target(fn)
+    return inheritable_thread_target(session)(fn)
+
+
+def run_concurrently(*fns: Callable[[], object]) -> list:
+    """Run the thunks on one driver thread each, under the caller's
+    Spark context; return their results in argument order. The first
+    failure (in argument order) is re-raised after every thunk ends."""
+    with ThreadPoolExecutor(max_workers=max(1, len(fns))) as pool:
+        futures = [pool.submit(_inheriting_spark_context(fn)) for fn in fns]
+    return [f.result() for f in futures]
 
 
 def get_spark(

@@ -3052,32 +3052,6 @@ def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir, monkeypatch)
     assert all(x[0] != 99999 and x[1] != 99999 for x in a)
 
 
-def test_poly_hash_kernel_bit_equal_reference(spark):
-    """The Arrow poly-hash kernel must equal functions.poly_hash
-    value-for-value — ASCII, non-ASCII code points (the JVM form
-    hashes codePointAt; the kernel decodes UTF-32), empty string
-    (fold init 0), and NULL (propagates)."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.functions import poly_hash
-    from datapipeline_template_spark.operators.text import poly_hash_kernel
-
-    rows = [
-        ("hello world",),
-        ("",),
-        (None,),
-        ("café naïve 中文 \U0001F600",),
-        ("a",),
-        ("the quick brown fox jumps over the lazy dog " * 5,),
-    ]
-    df = spark.createDataFrame(rows, "s string")
-    got = df.select(
-        poly_hash("s").alias("ref"), poly_hash_kernel("s").alias("ker")
-    ).collect()
-    for r in got:
-        assert r.ref == r.ker, (r.ref, r.ker)
-
-
 def test_shingle_rows_kernel_bit_equal_reference(spark, sf_dir):
     """shingle_rows_kernel must emit exactly the rows of
     explode(shingle_tokens(tokenize(text), k)) — same multiset of

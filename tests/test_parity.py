@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import re
 
 import duckdb
 import pytest
@@ -50,8 +51,18 @@ def _rowset(cols, rows):
     return sorted(repr(tuple(_canon(r[i]) for i in order)) for r in rows)
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("name", WITH_ORACLE)
+# The vector-search family (ss20–ss35) replays in the default suite
+# (about 2 min at sf0.001); every other row stays `slow`.
+_DEFAULT_PARITY = re.compile(r"^ss(2[0-9]|3[0-5])_")
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        n if _DEFAULT_PARITY.match(n) else pytest.param(n, marks=pytest.mark.slow)
+        for n in WITH_ORACLE
+    ],
+)
 def test_oracle_parity(spark, sf_dir, name):
     q = REGISTRY[name]
     sdf = q.fn(spark, sf_dir)

@@ -154,6 +154,43 @@ def test_sweep_tool_runs_and_reports(tmp_path):
     assert all(r["hash_match"] for r in rec.values())
 
 
+def test_sweep_tool_runs_udf_queries_outside_the_repo(tmp_path, sf_dir):
+    """Python workers import the package from PYTHONPATH, not from the
+    driver's sys.path: run from another directory, a UDF-backed query
+    (ss20's k-means assignment kernels) must still hash-match, and the
+    record carries both row-set digests."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "sweep.json"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(root, "tools", "sweep_all.py"),
+            "--sf-dir",
+            sf_dir,
+            "--only",
+            "^ss20_pq_adc_recall$",
+            "--out",
+            str(out),
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    rec = json.loads(out.read_text())["ss20_pq_adc_recall"]
+    assert rec["err"] is None and rec["hash_match"], rec
+    assert rec["spark_digest"] == rec["oracle_digest"]
+    assert len(rec["spark_digest"]) == 64
+
+
 def test_committed_full_sweep_artifact_is_current():
     """Round-6 process lapse, made structural: every round must carry
     a committed `SWEEP_FULL_r{N}.json` whose name set EQUALS the

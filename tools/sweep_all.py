@@ -15,6 +15,11 @@ Usage:
     python tools/sweep_all.py --sf-dir /root/testdata/sf0.001 \
         --only dd10 --out /tmp/sweep.json    # quick targeted check
 
+Each record carries `spark_digest` and `oracle_digest` (sha256 of the
+canonical row set), so two sweeps of different code can be diffed for
+byte-identical outputs; the printed summary is stamped with the UTC
+time and the checkout's `git rev-parse HEAD`.
+
 Exit status is non-zero if any query errors, mismatches, or returns an
 empty result (an oracle-matched EMPTY result is a trivially-green
 trap — see tools/audit_rowcounts.py).
@@ -24,13 +29,16 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import hashlib
 import json
 import math
 import os
 import re
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 
 def _canon(value):
@@ -50,6 +58,10 @@ def _rowset(cols, rows):
     return sorted(repr(tuple(_canon(r[i]) for i in order)) for r in rows)
 
 
+def _digest(rowset) -> str:
+    return hashlib.sha256("\n".join(rowset).encode()).hexdigest()
+
+
 def sweep(sf_dir: str, only: str | None = None) -> dict:
     import duckdb
 
@@ -57,6 +69,12 @@ def sweep(sf_dir: str, only: str | None = None) -> dict:
     from datapipeline_template_spark.queries import load_all
     from datapipeline_template_spark.session import get_spark
 
+    # Python workers inherit the environment, not the driver's sys.path:
+    # without this, UDF-backed queries cannot import the package when
+    # the tool runs from outside the repo.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(app_name="sweep_all", shuffle_partitions=8)
     registry = load_all()
     con = duckdb.connect()
@@ -73,6 +91,8 @@ def sweep(sf_dir: str, only: str | None = None) -> dict:
             "hash_match": None,
             "spark_rows": None,
             "oracle_rows": None,
+            "spark_digest": None,
+            "oracle_digest": None,
             "err": None,
         }
         try:
@@ -80,6 +100,8 @@ def sweep(sf_dir: str, only: str | None = None) -> dict:
             s_cols = [c.lower() for c in sdf.columns]
             s_rows = [tuple(r) for r in sdf.collect()]
             rec["spark_rows"] = len(s_rows)
+            s_set = _rowset(s_cols, s_rows)
+            rec["spark_digest"] = _digest(s_set)
             if q.oracle is None:
                 rec["err"] = "no_oracle"
             else:
@@ -87,11 +109,11 @@ def sweep(sf_dir: str, only: str | None = None) -> dict:
                 o_cols = [c.lower() for c in res.columns]
                 o_rows = res.fetchall()
                 rec["oracle_rows"] = len(o_rows)
+                o_set = _rowset(o_cols, o_rows)
+                rec["oracle_digest"] = _digest(o_set)
                 rec["rows_match"] = len(s_rows) == len(o_rows)
                 rec["schema_match"] = sorted(s_cols) == sorted(o_cols)
-                rec["hash_match"] = rec["schema_match"] and _rowset(
-                    s_cols, s_rows
-                ) == _rowset(o_cols, o_rows)
+                rec["hash_match"] = rec["schema_match"] and s_set == o_set
         except Exception as exc:  # noqa: BLE001 — per-query isolation
             rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
         results[name] = rec
@@ -114,7 +136,6 @@ def main() -> int:
         json.dump(results, f, indent=1, sort_keys=True)
 
     n = len(results)
-    oracle = [r for r in results.values() if r["err"] != "no_oracle" or r["hash_match"] is not None]
     green = [k for k, r in results.items() if r["hash_match"]]
     rows_only = [k for k, r in results.items() if r["err"] == "no_oracle"]
     errors = {
@@ -128,6 +149,13 @@ def main() -> int:
         if r["err"] is None and not r["hash_match"]
     ]
     empty = [k for k, r in results.items() if r["spark_rows"] == 0]
+    head = subprocess.run(
+        ["git", "-C", REPO_ROOT, "rev-parse", "HEAD"],
+        capture_output=True,
+        text=True,
+    ).stdout.strip() or "unknown"
+    stamp = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+    print(f"sweep at {stamp}, code {head}")
     print(
         f"sweep: {n} queries | {len(green)} hash-green | "
         f"{len(rows_only)} rows-only | {len(mismatch)} mismatched | "
